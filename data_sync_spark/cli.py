@@ -231,7 +231,9 @@ def cmd_verify(args) -> int:
     # The dict-replay oracle is driver-side BY DESIGN (it is the independent
     # golden model) — guard the toPandas so a huge feed fails loudly instead
     # of OOMing the driver. For feeds past the cap, verify a key-range slice
-    # per run or use inspector.inspect_all's distributed exceptAll audit.
+    # per run, or audit with inspector.inspect(table, expected=...) — one
+    # distributed grouped aggregation — against an expected state that is
+    # built without the driver.
     n_events = events.count()
     if n_events > args.max_oracle_events:
         print(
@@ -241,7 +243,8 @@ def cmd_verify(args) -> int:
                     "err": (
                         f"feed has {n_events} events > --max-oracle-events "
                         f"{args.max_oracle_events}; raise the cap explicitly or "
-                        "audit via inspector.inspect_all (distributed exceptAll)"
+                        "audit via inspector.inspect(table, expected=...) "
+                        "(distributed single-pass audit)"
                     ),
                 }
             )

@@ -6,9 +6,13 @@ and target stalled since last round ⇒ fail) and an alarm after N consecutive
 failures (``/root/reference/src/application/mysql_handler.go:314-368``,
 ``src/application/strategy/inspect/inspect.go:50-82``).
 
-Ours keeps the cheap watermark check (max applied offset vs feed max) and
-adds what a set-oriented engine can afford: exact row-count and a full
-``exceptAll`` equality audit against an expected state.
+Ours keeps the cheap watermark check (applied backfill watermark vs feed
+max offset) and adds what a set-oriented engine can afford: an exact
+multiset audit against an expected state. The audit is one grouped
+aggregation, not two counts plus two ``exceptAll`` passes: both sides are
+tagged, unioned, grouped on every stored column value, and one ``agg``
+returns the row counts and both directed differences — each side is
+scanned (and a merge-on-read side resolved) once.
 """
 
 from __future__ import annotations
@@ -18,7 +22,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_sync_spark.backfill import get_watermark
 from data_sync_spark.lake import LakeTable
+from data_sync_spark.session import job_description
 
 
 @dataclass
@@ -30,21 +36,39 @@ class InspectReport:
     extra_rows: int = 0  # in target, not in expected
     target_max_batch: int | None = None
     feed_max_offset: int | None = None
+    target_watermark: int | None = None  # applied backfill watermark, -1 if none
 
     def as_dict(self) -> dict:
         return {k: getattr(self, k) for k in self.__dataclass_fields__}
 
 
-def _canon(df: DataFrame) -> DataFrame:
-    """Canonical row form for set comparison: arrays → joined strings so
-    exceptAll compares token arrays exactly without array-equality quirks."""
-    cols = []
-    for f in df.schema.fields:
-        if str(f.dataType).startswith("ArrayType"):
-            cols.append(F.array_join(F.col(f.name).cast("array<string>"), ",").alias(f.name))
-        else:
-            cols.append(F.col(f.name).cast("string").alias(f.name))
-    return df.select(*cols)
+def audit_counts(actual: DataFrame, expected: DataFrame) -> tuple[int, int, int, int]:
+    """``(target_rows, expected_rows, missing_rows, extra_rows)`` in one
+    Spark action. ``missing``/``extra`` are the multiset differences
+    ``expected.exceptAll(actual)`` / ``actual.exceptAll(expected)``: each
+    distinct row contributes ``max(ne - na, 0)`` / ``max(na - ne, 0)`` where
+    ``na``/``ne`` are its multiplicities. Grouping compares stored values
+    exactly and null-safely, like ``exceptAll`` (arrays element by element,
+    so ``[1, null, 2]`` ≠ ``[1, 2]``); map columns, which ``exceptAll``
+    rejects, group by their sorted entries. ``expected`` is matched to
+    ``actual`` by column position."""
+    cols = actual.columns
+    both = actual.select(*cols, F.lit(1).alias("_na"), F.lit(0).alias("_ne")).union(
+        expected.select(*cols, F.lit(0).alias("_na"), F.lit(1).alias("_ne"))
+    )
+    na, ne = F.col("na"), F.col("ne")
+    row = (
+        both.groupBy(*cols)
+        .agg(F.sum("_na").alias("na"), F.sum("_ne").alias("ne"))
+        .agg(
+            F.sum(na),
+            F.sum(ne),
+            F.sum(F.greatest(ne - na, F.lit(0))),
+            F.sum(F.greatest(na - ne, F.lit(0))),
+        )
+        .collect()[0]
+    )
+    return tuple(int(v or 0) for v in row)
 
 
 def inspect(
@@ -53,25 +77,41 @@ def inspect(
     feed_max_offset: int | None = None,
     app_id: str | None = None,
 ) -> InspectReport:
-    actual = table.read()
-    target_rows = actual.count()
-    report = InspectReport(ok=True, target_rows=target_rows)
+    """Audit ``table``. With ``expected``: an exact multiset comparison
+    (``audit_counts``); ok iff nothing is missing or extra. With
+    ``feed_max_offset`` and ``app_id``: the watermark check — fail when the
+    app has applied no batch yet, or when its applied backfill watermark is
+    above the feed's max offset (target ahead of source, the reference's
+    first rule). The reference's third rule (source ahead and target
+    stalled since the last round) needs state kept across rounds and is
+    not checked here. Every Spark job runs under the job description
+    ``inspector.inspect``."""
+    with job_description(table.spark, "inspector.inspect"):
+        actual = table.read()
+        report = InspectReport(ok=True, target_rows=0)
 
-    if feed_max_offset is not None and app_id is not None:
-        last = table.last_batch_id(app_id)
-        report.target_max_batch = last
-        report.feed_max_offset = feed_max_offset
-        if last is None:
-            report.ok = False
+        if feed_max_offset is not None and app_id is not None:
+            report.target_max_batch = table.last_batch_id(app_id)
+            report.target_watermark = get_watermark(table, app_id)
+            report.feed_max_offset = feed_max_offset
+            if report.target_max_batch is None or report.target_watermark > feed_max_offset:
+                report.ok = False
 
-    if expected is not None:
-        expected = expected.select(*[f.name for f in actual.schema.fields])
-        report.expected_rows = expected.count()
-        a, e = _canon(actual), _canon(expected)
-        report.missing_rows = e.exceptAll(a).count()
-        report.extra_rows = a.exceptAll(e).count()
-        if report.missing_rows or report.extra_rows or report.expected_rows != target_rows:
-            report.ok = False
+        if expected is None:
+            report.target_rows = actual.count()
+        else:
+            (
+                report.target_rows,
+                report.expected_rows,
+                report.missing_rows,
+                report.extra_rows,
+            ) = audit_counts(actual, expected.select(*actual.columns))
+            if (
+                report.missing_rows
+                or report.extra_rows
+                or report.expected_rows != report.target_rows
+            ):
+                report.ok = False
     return report
 
 

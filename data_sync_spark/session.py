@@ -11,6 +11,7 @@ job run well at local[8] and on a 1000-executor cluster) and are safe on
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -115,3 +116,18 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def job_description(spark: SparkSession, name: str):
+    """Label every Spark job the calling thread launches inside the block
+    with ``name`` (``spark.job.description``, shown in the event log and
+    UI), then restore the caller's label. The caller's job group is left
+    alone, so a surrounding ``setJobGroup`` still sees these jobs."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", name)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)

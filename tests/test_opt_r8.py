@@ -9,6 +9,7 @@ exploded to ~one file per (partition, bucket) and tripped threshold
 auto-compaction every batch."""
 
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -44,19 +45,38 @@ def test_small_merge_writes_one_file_per_bucket_from_persisted_input(
 
 def test_large_merge_keeps_keyed_exchange(spark, tmp_path, monkeypatch):
     """Above the estimate threshold the keyed write must stay: one file per
-    bucket via the explicit exchange (pin by forcing the threshold to 0 and
-    checking the layout is identical — the two paths must agree)."""
+    bucket via the explicit exchange. Each arm must take its own write
+    branch — the executed plan of the bucket write's input shows a single-
+    partition ``Coalesce 1`` in the small arm and ``Exchange
+    hashpartitioning(_bucket…)`` in the keyed arm — and the two branches
+    must agree on layout and rows."""
     import data_sync_spark.lake.table as tbl
 
     feed = change_feed(spark, 20_000, n_keys=3_000, seed=12)
     cfg = PipelineConfig()
+    # record the executed plan of every DataFrame the merge writes
+    writer = type(feed).write
+    plans: list[str] = []
+
+    def spy(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return writer.fget(df)
+
+    monkeypatch.setattr(type(feed), "write", property(spy))
+    keyed_exchange = re.compile(r"Exchange hashpartitioning\(_bucket#\d+")
     layouts = {}
     for tag, thresh in (("small", tbl.ALIGNED_WRITE_MAX_EST_BYTES), ("keyed", -1)):
         monkeypatch.setattr(tbl, "ALIGNED_WRITE_MAX_EST_BYTES", thresh)
         t = LakeTable.create(
             spark, str(tmp_path / tag), TARGET_SCHEMA, n_buckets=8
         )
+        plans.clear()
         t.merge(net_changes(feed, cfg, t.schema), app_id="a", batch_id=0, mor=True)
+        assert len(plans) == 1, plans
+        if tag == "small":
+            assert "Coalesce 1" in plans[0] and not keyed_exchange.search(plans[0])
+        else:
+            assert keyed_exchange.search(plans[0]) and "Coalesce" not in plans[0]
         layouts[tag] = {
             b: len(e["delta"]) for b, e in t.current()["files"].items()
         }
